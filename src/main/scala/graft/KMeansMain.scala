@@ -24,7 +24,8 @@ import graft.sources.PointsSource
   *     override the reference lacks (which is why its own recorded
   *     runs are unreproducible);
   *   - integer-mean iteration arithmetic
-  *     (kmeans_mapreduce_core.cu:54-69 via `KMeansDF.stepInt`);
+  *     (kmeans_mapreduce_core.cu:54-69 via `KMeansDF.fitReferenceFrom`,
+  *     whose rounds `KMeansDF.stepInt` states declaratively);
   *   - the same output: one `Point: (x,y)` line per centroid to
   *     stdout AND to `<input>.output`
   *     (kmeans_with_mapreduce-cuda.cu:105-121), then the three
@@ -39,17 +40,29 @@ object KMeansMain {
     * its output loop. Returns the `Point: (x,y)` lines in centroid
     * slot order. Exposed separately so the spec can drive it without
     * process-level side effects. */
-  def run(spark: SparkSession, fname: String, seed: Long): Seq[String] = {
+  def run(spark: SparkSession, fname: String, seed: Long): Seq[String] =
+    fitFile(spark, fname, seed)
+      .getOrElse(throw new IllegalArgumentException(s"no points parsed from $fname"))._1
+
+  /** The first NumInput points, cached for the fit and unpersisted after
+    * it, the seeded init and integer Lloyd from it. Also returns the
+    * nanoTime at which loading and init ended, the reference's read_data /
+    * runTask stopwatch split (cu:36, 76-80). None when no point parses. */
+  private def fitFile(spark: SparkSession, fname: String,
+      seed: Long): Option[(Seq[String], Long)] = {
     val points = PointsSource.readPoints(spark, fname)
       .orderBy("id").limit(NumInput).cache()
-    val n = points.count().toInt
-    require(n > 0, s"no points parsed from $fname")
-    val init = ReferenceRng.seededInit(points, NumOutput, math.min(NumInput, n), seed)
-    val cs = KMeansDF.fitReferenceFrom(points, init, Iterations)
-    points.unpersist(blocking = false)
-    // Point is integer-coordinate (config.cuh:17-19); integer means keep
-    // it so — print as the reference's operator<< does
-    cs.map(c => s"Point: (${c.x.toLong},${c.y.toLong})")
+    try {
+      val n = points.count().toInt
+      Option.when(n > 0) {
+        val init = ReferenceRng.seededInit(points, NumOutput, math.min(NumInput, n), seed)
+        val loaded = System.nanoTime()
+        // Point is integer-coordinate (config.cuh:17-19); integer means
+        // keep it so — print as the reference's operator<< does
+        (KMeansDF.fitReferenceFrom(points, init, Iterations)
+          .map(c => s"Point: (${c.x.toLong},${c.y.toLong})"), loaded)
+      }
+    } finally points.unpersist(blocking = false)
   }
 
   def main(args: Array[String]): Unit = {
@@ -71,19 +84,10 @@ object KMeansMain {
       .orElse(sys.props.get("spark.graft.seed")).map(_.toLong)
       .getOrElse(System.currentTimeMillis())
     val t0 = System.nanoTime()
-    // load/init vs compute timing split mirrors the reference's
-    // read_data / runTask stopwatches (cu:36, 76-80)
-    val points = PointsSource.readPoints(spark, fname)
-      .orderBy("id").limit(NumInput).cache()
-    val n = points.count().toInt
-    if (n == 0) {
+    val (lines, t1) = fitFile(spark, fname, seed).getOrElse {
       println("Failed to read file.")
       sys.exit(1)
     }
-    val init = ReferenceRng.seededInit(points, NumOutput, math.min(NumInput, n), seed)
-    val t1 = System.nanoTime()
-    val cs = KMeansDF.fitReferenceFrom(points, init, Iterations)
-    val lines = cs.map(c => s"Point: (${c.x.toLong},${c.y.toLong})")
     lines.foreach(println)
     val outPath = java.nio.file.Paths.get(fname + ".output")
     java.nio.file.Files.write(outPath,

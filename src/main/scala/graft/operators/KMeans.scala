@@ -11,15 +11,16 @@ import org.apache.spark.sql.functions._
   *     a per-row codegen'd fold over a *broadcast-literal* centroid array
   *     — zero shuffle, no n×k intermediate.
   *   - shuffle+reduce (sort pairs by key, load-balanced per-cluster sum,
-  *     kmeans_mapreduce_core.cu:71-207): `groupBy(cid).avg` — Spark's
-  *     hash aggregation does map-side partial combine, so only k rows per
-  *     partition cross the wire; this is exactly the skew-proof "loading
-  *     balance" the reference hand-rolls, for free.
+  *     kmeans_mapreduce_core.cu:71-207): the fits' `treeAggregate`
+  *     ([[Lloyd]]) sends only k partial sums per partition — the
+  *     skew-proof "loading balance" the reference hand-rolls, for free.
+  *     `groupBy(cid)` is only the declarative [[step]] / [[stepInt]],
+  *     whose hash aggregation does the same map-side partial combine.
   *   - iterate (kmeans_mapreduce_core.cu:237-259): driver loop over k×dim
   *     doubles (tiny state), re-broadcast each round.
   *
   * At 100 TB: the point table is only ever scanned (never repartitioned);
-  * each iteration moves k×numPartitions partial-agg rows, independent of
+  * each iteration moves k partial sums per partition, independent of
   * data volume and of cluster-size skew.
   */
 object KMeansDF {
@@ -66,49 +67,6 @@ object KMeansDF {
       Centroid(i, r.getAs[Double]("x"), r.getAs[Double]("y"))
     }
 
-  /** One Lloyd iteration over a pinned coordinate RDD: broadcast
-    * centroids, treeAggregate of k×(Σx, Σy, n) partials. Same
-    * arithmetic and lowest-cid tie-break as [[step]], but the inner
-    * loop carries no Catalyst work — a fresh DataFrame plan would be
-    * re-analyzed and re-optimized every round because the centroid
-    * literals change. This is the one place imperative RDD code beats
-    * the declarative plan (and is exactly MLlib's own shape). */
-  private def stepRdd(rdd: org.apache.spark.rdd.RDD[(Double, Double)],
-      centroids: Seq[Centroid], roundTo: Int = 6): Seq[Centroid] = {
-    val sorted = centroids.sortBy(_.cid)
-    val cxs = sorted.map(_.x).toArray
-    val cys = sorted.map(_.y).toArray
-    val k = cxs.length
-    val bc = rdd.sparkContext.broadcast((cxs, cys))
-    try {
-      val (sx, sy, cnt) = rdd.treeAggregate(
-        (new Array[Double](k), new Array[Double](k), new Array[Long](k)))(
-        seqOp = { case (acc, (x, y)) =>
-          val (cx, cy) = bc.value
-          var best = Double.MaxValue; var bi = 0; var i = 0
-          while (i < k) {
-            val dx = x - cx(i); val dy = y - cy(i)
-            val d = dx * dx + dy * dy
-            if (d < best) { best = d; bi = i } // strict < → lowest cid wins ties
-            i += 1
-          }
-          acc._1(bi) += x; acc._2(bi) += y; acc._3(bi) += 1
-          acc
-        },
-        combOp = { case (a, b) =>
-          var i = 0
-          while (i < k) { a._1(i) += b._1(i); a._2(i) += b._2(i); a._3(i) += b._3(i); i += 1 }
-          a
-        })
-      def rnd(v: Double): Double =
-        BigDecimal(v).setScale(roundTo, BigDecimal.RoundingMode.HALF_UP).toDouble
-      sorted.zipWithIndex.map { case (c, i) =>
-        if (cnt(i) == 0) c // empty cluster unchanged, as in the reference
-        else Centroid(c.cid, rnd(sx(i) / cnt(i)), rnd(sy(i) / cnt(i)))
-      }
-    } finally bc.destroy()
-  }
-
   /** Full Lloyd's to convergence (max centroid movement < tol), bounded
     * iterations like the reference's ITERATIONS cap (config.cuh:11). */
   def fit(points: DataFrame, k: Int, maxIter: Int = 25, tol: Double = 1e-4): Seq[Centroid] =
@@ -118,30 +76,19 @@ object KMeansDF {
     * the convergent trajectory is deterministic (per-round HALF_UP
     * rounding, strict-< tie-break), so exposing the count lets an
     * oracle replay the SAME trajectory as a fixed chain of
-    * assign+update stages (km_lloyd's hash gate, round 11). */
+    * assign+update stages (km_lloyd's hash gate, round 11). Each round
+    * has [[step]]'s arithmetic and runs as one [[Lloyd]] job. */
   def fitWithIters(points: DataFrame, k: Int, maxIter: Int = 25,
-      tol: Double = 1e-4): (Seq[Centroid], Int) = {
-    // iterative refinement re-scans the points every round: pin the
-    // two coordinate columns (MEMORY_AND_DISK) for the duration
-    val rdd = points.select(col("x"), col("y"))
-      .rdd.map(r => (r.getDouble(0), r.getDouble(1)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var cs = initFirstK(points, k)
-      var iter = 0
-      var moved = Double.MaxValue
-      while (iter < maxIter && moved >= tol) {
-        val next = stepRdd(rdd, cs)
-        moved = cs.zip(next).map { case (a, b) =>
-          math.max(math.abs(a.x - b.x), math.abs(a.y - b.y))
-        }.max
-        cs = next
-        iter += 1
-        if (sys.env.contains("SPARK_GRAFT_KM_DEBUG"))
-          System.err.println(s"[km] iter $iter moved=$moved t=${System.nanoTime() / 1e9}")
-      }
-      (cs, iter)
-    } finally rdd.unpersist(blocking = false)
+      tol: Double = 1e-4): (Seq[Centroid], Int) =
+    lloyd(points, initFirstK(points, k), maxIter, Some(tol), integer = false)
+
+  private def lloyd(points: DataFrame, init: Seq[Centroid], maxIter: Int,
+      tol: Option[Double], integer: Boolean): (Seq[Centroid], Int) = {
+    val sorted = init.sortBy(_.cid)
+    val (cs, iters) = Lloyd.fit(points, array(col("x"), col("y")),
+      sorted.map(c => Array(c.x, c.y)).toArray, maxIter, tol,
+      Lloyd.Arith(decomposed = false, integer))
+    (sorted.zip(cs).map { case (c, v) => Centroid(c.cid, v(0), v(1)) }, iters)
   }
 
   /** WSSSE: sum of squared distance to the nearest centroid. */
@@ -170,48 +117,15 @@ object KMeansDF {
 
   /** The reference's full pipeline shape: fixed iteration count
     * (config.cuh ITERATIONS), integer means, deterministic init. */
-  def fitReference(points: DataFrame, k: Int, iterations: Int): Seq[Centroid] = {
-    val pinned = points.persist()
-    try {
-      var cs = initFirstK(pinned, k)
-      var i = 0
-      while (i < iterations) { cs = stepInt(pinned, cs); i += 1 }
-      cs
-    } finally pinned.unpersist(blocking = false)
-  }
+  def fitReference(points: DataFrame, k: Int, iterations: Int): Seq[Centroid] =
+    fitReferenceFrom(points, initFirstK(points, k), iterations)
 
   /** [[fitReference]] from an EXPLICIT init (the CLI's seeded draw,
-    * kmeans_with_mapreduce-cuda.cu:75), with a cycle early-exit:
-    * `stepInt` is deterministic, so the trajectory is eventually
-    * periodic — usually a fixpoint, occasionally a short limit cycle
-    * (integer means can oscillate between two partitions). On
-    * revisiting a state the remaining rounds are resolved by
-    * arithmetic ((iterations − i) mod period extra steps), so the
-    * result is IDENTICAL to running the reference's full fixed count,
-    * at a fraction of the rounds. State history is ≤ iterations × k
-    * tiny case classes — driver-trivial. */
+    * kmeans_with_mapreduce-cuda.cu:75): [[stepInt]]'s arithmetic, one
+    * [[Lloyd]] job per round, with the cycle early-exit of
+    * [[Lloyd.fit]] — the result is IDENTICAL to running the
+    * reference's full fixed count, at a fraction of the rounds. */
   def fitReferenceFrom(points: DataFrame, init: Seq[Centroid],
-      iterations: Int): Seq[Centroid] = {
-    val pinned = points.persist()
-    try {
-      val seen = scala.collection.mutable.HashMap[Seq[Centroid], Int]()
-      var cs = init.sortBy(_.cid)
-      var i = 0
-      var done = false
-      while (i < iterations && !done) {
-        seen.get(cs) match {
-          case Some(j) => // entered a cycle of period i-j at round j
-            val rem = (iterations - i) % (i - j)
-            var r = 0
-            while (r < rem) { cs = stepInt(pinned, cs); r += 1 }
-            done = true
-          case None =>
-            seen(cs) = i
-            cs = stepInt(pinned, cs)
-            i += 1
-        }
-      }
-      cs
-    } finally pinned.unpersist(blocking = false)
-  }
+      iterations: Int): Seq[Centroid] =
+    lloyd(points, init, iterations, None, integer = true)._1
 }

@@ -100,92 +100,14 @@ object KMeansND {
         r.getAs[Seq[Float]]("vec").map(_.toDouble).toArray
     }.sortBy(_._1).toSeq
 
-  /** One Lloyd iteration over a pinned vector RDD: broadcast k×dim
-    * centroids, treeAggregate of k×dim partial sums — no Catalyst work
-    * in the inner loop (a fresh plan would re-analyze every round since
-    * the centroid literals change; MLlib's own KMeans has this shape). */
-  private def stepRdd(rdd: org.apache.spark.rdd.RDD[Array[Double]],
-      centroids: Seq[(Int, Array[Double])], roundTo: Int = 6): Seq[(Int, Array[Double])] = {
-    val sorted = centroids.sortBy(_._1)
-    val cvs = sorted.map(_._2).toArray
-    require(cvs.forall(_.length == cvs.head.length),
-      s"ragged centroid dims: ${cvs.map(_.length).distinct.mkString(",")}")
-    val cns = cvs.map(norm2)
-    val k = cvs.length
-    val bc = rdd.sparkContext.broadcast((cvs, cns))
-    try {
-      val (sums, cnt) = rdd.treeAggregate(
-        (Array.fill(k)(Array.empty[Double]), new Array[Long](k)))(
-        seqOp = { case ((s, n), x) =>
-          val (cv, cn) = bc.value
-          // a ragged corpus must fail fast, not yield a silently-partial
-          // dot product or mis-sized sum arrays downstream
-          require(cv.isEmpty || x.length == cv(0).length,
-            s"vector dim ${x.length} != centroid dim ${cv(0).length}")
-          var na = 0.0; var i = 0
-          while (i < x.length) { na += x(i) * x(i); i += 1 }
-          var best = Double.MaxValue; var bi = 0; var c = 0
-          while (c < k) {
-            var dot = 0.0; var j = 0
-            val v = cv(c)
-            while (j < x.length) { dot += x(j) * v(j); j += 1 }
-            val d = (na - 2 * dot) + cn(c)
-            if (d < best) { best = d; bi = c } // strict < → lowest cid wins
-            c += 1
-          }
-          if (s(bi).isEmpty) s(bi) = new Array[Double](x.length)
-          var j = 0
-          while (j < x.length) { s(bi)(j) += x(j); j += 1 }
-          n(bi) += 1
-          (s, n)
-        },
-        combOp = { case ((sa, na), (sb, nb)) =>
-          var c = 0
-          while (c < k) {
-            if (sa(c).isEmpty) sa(c) = sb(c)
-            else if (sb(c).nonEmpty) {
-              var j = 0
-              while (j < sa(c).length) { sa(c)(j) += sb(c)(j); j += 1 }
-            }
-            na(c) += nb(c)
-            c += 1
-          }
-          (sa, na)
-        })
-      def rnd(v: Double): Double =
-        BigDecimal(v).setScale(roundTo, BigDecimal.RoundingMode.HALF_UP).toDouble
-      sorted.zipWithIndex.map { case ((cid, cv), i) =>
-        if (cnt(i) == 0) cid -> cv // empty cluster unchanged
-        else cid -> sums(i).map(s => rnd(s / cnt(i)))
-      }
-    } finally bc.destroy()
-  }
-
+  /** Lloyd's from [[seed]] to convergence (max coordinate movement
+    * < tol). Each round has [[step]]'s arithmetic and runs as one
+    * [[Lloyd]] job; a corpus of mixed vector dims fails fast. */
   def fit(points: DataFrame, k: Int, maxIter: Int = 20, tol: Double = 1e-4)
       : Seq[(Int, Array[Double])] = {
-    val spark = points.sparkSession
-    val rdd = points.select(col("vec"))
-      .rdd.map { r =>
-        val s = r.getSeq[Float](0)
-        val a = new Array[Double](s.length)
-        var i = 0
-        while (i < s.length) { a(i) = s(i).toDouble; i += 1 }
-        a
-      }
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      var cs = seed(points, k)
-      var iter = 0
-      var moved = Double.MaxValue
-      while (iter < maxIter && moved >= tol) {
-        val next = stepRdd(rdd, cs)
-        moved = cs.zip(next).map { case ((_, a), (_, b)) =>
-          a.zip(b).map { case (p, q) => math.abs(p - q) }.max
-        }.max
-        cs = next
-        iter += 1
-      }
-      cs
-    } finally rdd.unpersist(blocking = false)
+    val init = seed(points, k)
+    val (cs, _) = Lloyd.fit(points, col("vec"), init.map(_._2).toArray,
+      maxIter, Some(tol), Lloyd.Arith(decomposed = true, integer = false))
+    init.map(_._1).zip(cs)
   }
 }

@@ -534,7 +534,7 @@ object Clustering extends QueryPack {
     }),
     // The reference's actual loop shape: a FIXED iteration count with no
     // convergence test in the hot path (config.cuh ITERATIONS,
-    // kmeans_mapreduce_core.cu:237-259) — tol=0 runs stepRdd exactly
+    // kmeans_mapreduce_core.cu:237-259) — tol=0 runs the Lloyd round exactly
     // maxIter times. Unlike the tol-gated km_lloyd, the trajectory is a
     // pure function of the data, so the oracle replays every iteration
     // as a chained CTE.

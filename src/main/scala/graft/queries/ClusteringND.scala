@@ -42,7 +42,7 @@ object ClusteringND extends QueryPack {
       }.toDF("cid", "dim", "c")
     }),
 
-    // Fixed-iteration 64-d Lloyd (tol=0 → exactly 2 stepRdd rounds, the
+    // Fixed-iteration 64-d Lloyd (tol=0 → exactly 2 Lloyd rounds, the
     // reference's ITERATIONS shape in n dims). Centroid values are the
     // per-iteration round(…,6) means, emitted as-is — the oracle
     // replays both rounds as chained unnest/relist CTEs.

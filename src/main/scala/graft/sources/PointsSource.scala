@@ -8,7 +8,8 @@ import org.apache.spark.sql.types._
   * integer pairs, one point per line (kmeans_with_mapreduce-cuda.cu:51-70,
   * Birch benchmark files). Distributed text scan — no driver-side
   * parsing; malformed lines are dropped, matching the reference's
-  * best-effort stream extraction. */
+  * best-effort stream extraction, and so are lines whose x or y is not
+  * finite (`NaN`, `Infinity`), which no centroid can be nearest to. */
 object PointsSource {
 
   val schema: StructType = StructType(Seq(
@@ -20,7 +21,9 @@ object PointsSource {
       .select(
         expr("try_cast(element_at(parts, 1) AS DOUBLE)").as("x"),
         expr("try_cast(element_at(parts, 2) AS DOUBLE)").as("y"))
-      .filter(col("x").isNotNull && col("y").isNotNull)
+      // Spark orders NaN above +∞, so `< ∞` also drops NaN and null
+      .filter(abs(col("x")) < Double.PositiveInfinity &&
+        abs(col("y")) < Double.PositiveInfinity)
       .withColumn("id", monotonically_increasing_id())
       .select("id", "x", "y")
 }

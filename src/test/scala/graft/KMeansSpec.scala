@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.operators.KMeansDF
 import graft.operators.KMeansDF.Centroid
 
@@ -219,5 +220,79 @@ class KMeansSpec extends SparkSpec {
     val blobKept = sel.keys.count(_ < 5000L)
     assert(blobKept > 60 && blobKept < 230,
       s"blob kept $blobKept of 1000 — expected ~128")
+  }
+
+  /** Birch-shaped integer points, as the benchmark's generator makes
+    * them: seeded Gaussian blobs (σ = 15 000) on a 10×10 grid in
+    * [0, 10⁶], in shuffled order. */
+  private def birch(n: Int, seed: Long) = {
+    val rnd = new scala.util.Random(seed)
+    def coord(cell: Int) =
+      math.rint((cell + 0.5) * 1e5 + rnd.nextGaussian() * 15000).max(0).min(1e6)
+    (0 until n).map { i =>
+      val blob = rnd.nextInt(100)
+      val x = coord(blob % 10)
+      (i.toLong, x, coord(blob / 10))
+    }.toDF("id", "x", "y")
+  }
+
+  test("integer fit equals the stepInt chain round for round") {
+    val p = birch(3000, 11L)
+    val init = KMeansDF.initFirstK(p, 15)
+    val chain = Iterator.iterate(init)(KMeansDF.stepInt(p, _)).take(11).toIndexedSeq
+    (1 to 10).foreach { n =>
+      assert(KMeansDF.fitReferenceFrom(p, init, n) === chain(n), s"after $n rounds")
+    }
+    // this trajectory settles after about two dozen rounds; the cycle
+    // exit must land where the chain does
+    val settled = Iterator.iterate(chain(10))(KMeansDF.stepInt(p, _))
+      .sliding(2).collectFirst { case Seq(a, b) if a == b => a }.get
+    assert(KMeansDF.fitReferenceFrom(p, init, 999) === settled)
+  }
+
+  test("fitReference is fitReferenceFrom from the first-k init") {
+    val p = birch(2000, 12L)
+    assert(KMeansDF.fitReference(p, 15, 6) ===
+      KMeansDF.fitReferenceFrom(p, KMeansDF.initFirstK(p, 15), 6))
+  }
+
+  test("a fit leaves the caller's cache cached") {
+    val p = birch(2000, 13L).cache()
+    try {
+      p.count()
+      KMeansDF.fitReferenceFrom(p, KMeansDF.initFirstK(p, 15), 5)
+      assert(p.storageLevel !== StorageLevel.NONE,
+        "fitReferenceFrom dropped the caller's cache")
+      KMeansDF.fit(p, 15, maxIter = 3)
+      assert(p.storageLevel !== StorageLevel.NONE,
+        "fit dropped the caller's cache")
+      val v = p.select($"id", array($"x".cast("float"), $"y".cast("float")).as("vec"))
+        .cache()
+      try {
+        graft.operators.KMeansND.fit(v, 15, maxIter = 3)
+        assert(v.storageLevel !== StorageLevel.NONE,
+          "KMeansND.fit dropped the caller's cache")
+      } finally v.unpersist(blocking = true)
+    } finally p.unpersist(blocking = true)
+  }
+
+  test("a fit of an uncached input unpins what it pinned") {
+    val p = birch(2000, 14L)
+    val v = p.select($"id", array($"x".cast("float"), $"y".cast("float")).as("vec"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    KMeansDF.fitReferenceFrom(p, KMeansDF.initFirstK(p, 15), 5)
+    KMeansDF.fit(p, 15, maxIter = 3)
+    graft.operators.KMeansND.fit(v, 15, maxIter = 3)
+    assert(spark.sparkContext.getPersistentRDDs.keySet === before)
+  }
+
+  test("fit counts a non-finite or null point nowhere, as step's cid -1 does") {
+    val p = Seq((0L, 0.0, 0.0), (1L, 10.0, 10.0), (2L, 1.0, 0.0),
+      (3L, Double.NaN, 5.0), (4L, 3.0, Double.PositiveInfinity)).toDF("id", "x", "y")
+    val viaFit = KMeansDF.fit(p, 2, maxIter = 1, tol = 0.0)
+    assert(viaFit === KMeansDF.step(p, KMeansDF.initFirstK(p, 2)))
+    assert(viaFit === Seq(Centroid(0, 0.5, 0.0), Centroid(1, 10.0, 10.0)))
+    val withNull = p.union(Seq((5L, Option.empty[Double], 1.0)).toDF("id", "x", "y"))
+    assert(KMeansDF.fit(withNull, 2, maxIter = 1, tol = 0.0) === viaFit)
   }
 }

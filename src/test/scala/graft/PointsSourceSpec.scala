@@ -10,7 +10,8 @@ class PointsSourceSpec extends SparkSpec {
 
   test("readPoints parses whitespace x/y lines and drops malformed ones") {
     val f = Files.createTempFile("points", ".txt")
-    Files.writeString(f, "1 2\n3   4\n\nnot a point\n10 20\n")
+    Files.writeString(f,
+      "1 2\n3   4\n\nnot a point\n10 20\nNaN 5\n3 Infinity\n")
     val pts = PointsSource.readPoints(spark, f.toString)
     val got = pts.select("x", "y").as[(Double, Double)].collect().toSet
     assert(got === Set((1.0, 2.0), (3.0, 4.0), (10.0, 20.0)))
