@@ -1,6 +1,8 @@
 package graft.operators
 
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.col
 
 /** Arithmetic-exact port of the reference's centroid-init RNG
@@ -63,26 +65,57 @@ object ReferenceRng {
     * uniform_int(0, n) pick input points BY FILE POSITION as the
     * initial centroids, in draw order (slot i = centroid cid i). The
     * inclusive-bound draw n is clamped to n-1 (in the original it
-    * reads past the array — unreproducible garbage). `PointsSource`
-    * ids are monotone in file order but not contiguous, so positions
-    * are id-ranks — computed by a RANGE-partitioned sort plus
-    * `zipWithIndex` (per-partition offsets from one count job), never
-    * a global row_number window, which ranks the whole point set on a
-    * single reducer; then a k-row collect. Duplicate draws are kept,
-    * exactly as the reference does. */
+    * reads past the array — unreproducible garbage). Duplicate draws
+    * are kept, exactly as the reference does.
+    *
+    * `points` must hold its ids in ascending order within and across
+    * its partitions, as `PointsSource.readPoints` and any frame sorted
+    * by `id` do; a position is then a partition plus an offset in it.
+    * Two jobs and no shuffle: the first returns each partition's count,
+    * first id, last id and whether its ids ascend; the second reads the
+    * drawn offsets from only the partitions they fall in. A frame out
+    * of id order throws `IllegalArgumentException`. */
   def seededInit(points: DataFrame, k: Int, n: Int, seed: Long): Seq[KMeansDF.Centroid] = {
     val rng = new ReferenceRng(seed)
     val idx = Seq.fill(k)(math.min(rng.nextInt(n), n - 1).toLong)
-    val target = idx.toSet
-    val byPos = points.select(col("id"), col("x"), col("y"))
-      .orderBy("id").rdd.zipWithIndex()
-      .filter { case (_, pos) => target.contains(pos) }
-      .map { case (row, pos) =>
-        pos -> (row.getDouble(1), row.getDouble(2)) }
-      .collect().toMap
-    idx.zipWithIndex.map { case (pos, slot) =>
-      val (x, y) = byPos(pos)
-      KMeansDF.Centroid(slot, x, y)
+    val rows = points.select(col("id"), col("x"), col("y")).queryExecution.toRdd
+    val sc = points.sparkSession.sparkContext
+    // (count, first id, last id, ascending) per partition
+    val stats = sc.runJob(rows, (it: Iterator[InternalRow]) => {
+      var count, first, last = 0L
+      var ascending = true
+      it.foreach { r =>
+        val id = r.getLong(0)
+        if (count == 0) first = id else if (id <= last) ascending = false
+        last = id
+        count += 1
+      }
+      (count, first, last, ascending)
+    })
+    val filled = stats.filter(_._1 > 0)
+    require(filled.forall(_._4) &&
+      filled.zip(filled.drop(1)).forall { case (a, b) => a._3 < b._2 },
+      "seededInit reads positions as id ranks: its frame's partitions must " +
+        "hold ascending ids in order; sort it by id first")
+    val starts = stats.scanLeft(0L)(_ + _._1)
+    require(idx.forall(_ < starts.last),
+      s"seededInit draws positions below $n, but the frame holds ${starts.last} points")
+    // the last partition starting at or before pos skips empty ones
+    val at = idx.map { pos =>
+      val p = starts.lastIndexWhere(_ <= pos, stats.length - 1)
+      (p, pos - starts(p))
+    }
+    val wanted = at.groupMap(_._1)(_._2).map { case (p, offs) => p -> offs.toSet }
+    val picked = sc.runJob(rows, (ctx: TaskContext, it: Iterator[InternalRow]) => {
+      val offs = wanted(ctx.partitionId())
+      it.take(offs.max.toInt + 1).zipWithIndex.collect {
+        case (r, off) if offs.contains(off.toLong) =>
+          (ctx.partitionId(), off.toLong) -> (r.getDouble(1), r.getDouble(2))
+      }.toArray
+    }, wanted.keys.toSeq.sorted).flatten.toMap
+    at.zipWithIndex.map { case (slot, cid) =>
+      val (x, y) = picked(slot)
+      KMeansDF.Centroid(cid, x, y)
     }
   }
 }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Columnar/row source+sink round-trips beyond the driver's parquet
   * tables (SURVEY.md §2 sources): JSONL and CSV with explicit schemas
@@ -32,7 +33,15 @@ object Sinks {
 
   /** Hive-partitioned parquet: directory per partition-column value, so
     * partition-key predicates prune whole directories at planning time
-    * (PartitionFilters in the scan — zero I/O for pruned values). */
+    * (PartitionFilters in the scan — zero I/O for pruned values).
+    *
+    * The rows are first hash-partitioned by the column into
+    * `defaultParallelism` tasks, so each value is written by one task as
+    * one file, however many partitions `df` has; without it every input
+    * partition writes its own file for every value it holds. Write
+    * parallelism is then at most the number of distinct values, which
+    * suits its callers: K-means clusters, nations, IVF cells. */
   def writePartitioned(df: DataFrame, path: String, partitionCol: String): Unit =
-    df.write.mode("overwrite").partitionBy(partitionCol).parquet(path)
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism, col(partitionCol))
+      .write.mode("overwrite").partitionBy(partitionCol).parquet(path)
 }

@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.Files
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.functions.desc
 import graft.operators.{KMeansDF, ReferenceRng}
 import graft.sources.PointsSource
 
@@ -17,6 +20,9 @@ import graft.sources.PointsSource
 class KMeansMainSpec extends SparkSpec {
 
   private val birch = "/root/reference/data/birch1.txt"
+  // the pinned seed-42 stream below: slot order = draw order
+  private val drawn42 = Seq(3, 5246, 7355, 2633, 3762, 1963, 9759, 5123,
+    5305, 2571, 1070, 8155, 9006, 4520, 2454)
 
   test("minstd_rand0 raw draws match libstdc++ bit-exactly") {
     // g++ (libstdc++): default_random_engine g(42); g() five times
@@ -51,16 +57,40 @@ class KMeansMainSpec extends SparkSpec {
       .orderBy("id").limit(KMeansMain.NumInput).cache()
     try {
       val init = ReferenceRng.seededInit(points, 15, 10000, seed = 42L)
-      // slot order = draw order (the pinned seed-42 stream above)
-      val drawn = Seq(3, 5246, 7355, 2633, 3762, 1963, 9759, 5123, 5305,
-        2571, 1070, 8155, 9006, 4520, 2454)
       val byPos = points.orderBy("id").collect()
         .map(r => (r.getDouble(1), r.getDouble(2)))
       assert(init.map(_.cid) === (0 until 15))
-      init.zip(drawn).foreach { case (c, pos) =>
+      init.zip(drawn42).foreach { case (c, pos) =>
         assert((c.x, c.y) === byPos(pos), s"slot ${c.cid} != file pos $pos")
       }
     } finally points.unpersist(blocking = false)
+  }
+
+  test("seededInit picks the drawn file positions of a generated Birch-shaped file") {
+    // 100 Gaussian blobs on a 10×10 grid in [0, 10⁶], as in Birch-1
+    val f = Files.createTempFile("birch_like", ".txt")
+    try {
+      val rnd = new scala.util.Random(42)
+      def coord(cell: Int) =
+        math.max(0L, math.min(1000000L, cell * 100000L + 50000L + (rnd.nextGaussian() * 8000).round))
+      Files.writeString(f, Seq.fill(12000)(
+        s"${coord(rnd.nextInt(10))} ${coord(rnd.nextInt(10))}").mkString("", "\n", "\n"))
+      val file = Files.readAllLines(f).asScala.toSeq.map { l =>
+        val Array(x, y) = l.split(" ")
+        (x.toDouble, y.toDouble)
+      }
+      val want = drawn42.map(file)
+      val points = PointsSource.readPoints(spark, f.toString)
+      assert(points.rdd.getNumPartitions > 1)
+      for (frame <- Seq(points, points.coalesce(1))) {
+        val init = ReferenceRng.seededInit(frame, 15, 10000, seed = 42L)
+        assert(init.map(_.cid) === (0 until 15))
+        assert(init.map(c => (c.x, c.y)) === want)
+      }
+      val e = intercept[IllegalArgumentException](
+        ReferenceRng.seededInit(points.orderBy(desc("id")), 15, 10000, seed = 42L))
+      assert(e.getMessage.contains("sort it by id"))
+    } finally Files.delete(f)
   }
 
   test("KMeansMain emits the reference's output contract on birch1") {

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import graft.operators.KMeansDF
 import graft.sources.PointsSource
 
@@ -30,5 +31,25 @@ class PointsSourceSpec extends SparkSpec {
     assert(cs.length === 2)
     val xs = cs.map(_.x).sorted
     assert(xs(0) < 100 && xs(1) > 900, s"centroids should split the blobs: $cs")
+  }
+
+  test("readPoints splits a file across the session's cores, ids ascending in file order") {
+    val f = Files.createTempFile("points3", ".txt")
+    try {
+      val rnd = new scala.util.Random(7)
+      Files.writeString(f, Seq.fill(2000)(
+        s"${rnd.nextInt(1000000)} ${rnd.nextInt(1000000)}").mkString("", "\n", "\n"))
+      val parts = PointsSource.readPoints(spark, f.toString).rdd.glom().collect()
+      assert(parts.length === spark.sparkContext.defaultParallelism)
+      assert(parts.forall(_.nonEmpty), "every split holds lines")
+      val rows = parts.flatten.toSeq
+      val ids = rows.map(_.getLong(0))
+      assert(ids.zip(ids.tail).forall { case (a, b) => a < b }, "ids ascend across partitions")
+      val file = Files.readAllLines(f).asScala.toSeq.map { l =>
+        val Array(x, y) = l.split(" ")
+        (x.toDouble, y.toDouble)
+      }
+      assert(rows.map(r => (r.getDouble(1), r.getDouble(2))) === file)
+    } finally Files.delete(f)
   }
 }

@@ -20,7 +20,7 @@ class ReferenceFidelitySpec extends SparkSpec {
   private val K = 15
 
   private lazy val points =
-    PointsSource.readPoints(spark, birch).limit(NumInput).cache()
+    PointsSource.readPoints(spark, birch).orderBy("id").limit(NumInput).cache()
 
   test("reads the reference's input exactly as it does") {
     assert(points.count() === NumInput)

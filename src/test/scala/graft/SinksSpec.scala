@@ -85,4 +85,19 @@ class SinksSpec extends SparkSpec {
       assert(scan.count() === want)
     } finally rm(dir)
   }
+
+  test("writePartitioned writes one parquet file per value of a multi-partition frame") {
+    val dir = tmp("graft_onefile_")
+    try {
+      val df = spark.range(0, 2000, 1, 8).select($"id", ($"id" % 5).cast("int").as("part"))
+      assert(df.rdd.getNumPartitions === 8)
+      Sinks.writePartitioned(df, s"$dir/out", "part")
+      val files = new java.io.File(s"$dir/out").listFiles().filter(_.isDirectory)
+        .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet")))
+        .sorted.toSeq
+      assert(files === (0 until 5).map(v => s"part=$v" -> 1))
+      val back = spark.read.parquet(s"$dir/out").select("id", "part")
+      assert(back.exceptAll(df).isEmpty && df.exceptAll(back).isEmpty)
+    } finally rm(dir)
+  }
 }
