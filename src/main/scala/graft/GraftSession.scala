@@ -8,6 +8,17 @@ import graft.functions.{CosineSimilarity, MinHashBands, NGramHashSet, SimHash64,
   *
   * `builder()` applies the recommended config (shuffle partitions sized
   * to cores — AQE coalesces upward at cluster scale; UTC timestamps).
+  * It also sizes Spark's generated-code cache to 1000 classes (default
+  * 100). One perfbench `graph_loops` repetition — q_mst, q_kcore and
+  * q_betweenness — uses about 330 distinct generated classes
+  * (~170 + 74 + 93). The cache is four LRU segments of a quarter of
+  * its size each, so at 100 the cyclic access pattern evicted every
+  * class before its reuse, and even q_kcore's 75 classes alone
+  * overflowed a 25-entry segment in about one JVM of three. With
+  * `operators.SessionScope`'s clones sharing one classloader, 1000
+  * lets a kernel's second call compile nothing. It is a static conf,
+  * read once when the JVM first generates code, so it takes effect only
+  * through a session built here before any query ran.
   * `registerFunctions` exposes the native expressions to SQL so
   * `spark.sql("SELECT cosine_sim(a, b) ...")` works without the Scala
   * API. */
@@ -27,6 +38,7 @@ object GraftSession {
       // q_semi_anti scale plan depends on it.
       .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
 
   /** The cluster-deployment preset (1000-executor / 100 TB shape).
     * Local runs don't need these; a production submit applies them on

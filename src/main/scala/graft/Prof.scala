@@ -1,12 +1,18 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Per-job profiler for a single query key: runs
-  * `SparkEntry.queries(key)` twice (pass 1 pays codegen/JIT warmup)
-  * and prints every job over 300 ms with its stage/task shape — the
-  * tool that localized q_mst's cost to AQE-off task floors rather
-  * than job count. Usage:
+  * `SparkEntry.queries(key)` twice and prints every job over 300 ms
+  * with its stage/task shape — the tool that localized q_mst's cost to
+  * AQE-off task floors rather than job count. Each pass also prints its
+  * Janino compile count and compile time. Pass 1 pays JIT warmup and
+  * compiles the key's generated classes; pass 2 should compile none
+  * (q_mst may still compile a few), since the builder's codegen cache
+  * holds a whole repetition and `SessionScope` clones share one
+  * classloader — a non-zero pass 2 means one of the two broke. Usage:
   * {{{ sbt "runMain graft.Prof q_mst /root/testdata/sf0.1" }}} */
 object Prof {
   def main(args: Array[String]): Unit = {
@@ -69,13 +75,18 @@ object Prof {
     SparkEntry.queries("q1_agg")(spark, d).count()
     for (pass <- 1 to 2) {
       jobs = 0; jobMs = 0; hist.clear()
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val compileNs0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
       SparkEntry.queries(key)(spark, d).count()
       val dt = (System.nanoTime() - t0) / 1e9
       // drain the async listener bus so trailing onJobEnd events land
       // before the histogram is read/cleared (r18 ADVICE)
       Thread.sleep(500)
-      println(f"PASS $pass ($key): $dt%.2f s, $jobs jobs, ${jobMs / 1000.0}%.2f s in jobs")
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      val compileS = (CodeGenerator.compileTime - compileNs0) / 1e9
+      println(f"PASS $pass ($key): $dt%.2f s, $jobs jobs, ${jobMs / 1000.0}%.2f s in jobs, " +
+        f"$compiles compiles, $compileS%.2f s compiling")
       if (pass == 2) hist.toSeq.sortBy(-_._2._2).take(15).foreach {
         case (site, (n, ms)) => println(f"  SITE $n%4d jobs ${ms / 1000.0}%7.2f s  $site")
       }

@@ -557,10 +557,9 @@ object Dedup {
     // under its own session, re-exposed as a leaf in the clone), so
     // every loop frame and the returned labels plan under the clone's
     // conf and concurrent queries cannot race the capture
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.adaptive.enabled", "false")
-    val edges0 = org.apache.spark.sql.graftbridge.SessionBridge
-      .rebind(edges1, s2)
+    SessionScope.withAqeOff(spark) { s2 =>
+      val edges0 = org.apache.spark.sql.graftbridge.SessionBridge
+        .rebind(edges1, s2)
       val edges = ckpt(edges0
         .union(edges0.select(col("dst"), col("src")))
         .repartition(col("dst")))
@@ -625,6 +624,7 @@ object Dedup {
         if (ids.contains(id) && id != keep) rdd.unpersist(false)
       }
       result
+    }
   }
 
   /** Connected components by alternating large-star / small-star

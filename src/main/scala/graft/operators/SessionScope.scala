@@ -22,10 +22,23 @@ import org.apache.spark.sql.SparkSession
   * later actions on the returned frame. Function/temp-view registries
   * are per-session — bodies must build inputs from tables/paths and
   * Column expressions (every pack query does), not from the shared
-  * session's registered names. */
+  * session's registered names.
+  *
+  * Every clone turns artifact isolation OFF before its first use.
+  * Spark keys its generated-code cache by (thread context classloader,
+  * code), and an isolated session runs its tasks under a classloader of
+  * its own, so with isolation on each clone — one per kernel call —
+  * recompiled all of its generated classes even when the code was
+  * byte-identical to the previous call's (q_mst ~170, q_kcore 74,
+  * q_betweenness 93 Janino compiles per call). Non-isolated clones all
+  * run on the default classloader and share one cache entry per class,
+  * so a kernel's second call compiles nothing. What this gives up: a
+  * clone cannot see artifacts (jars, files) added to an isolated
+  * parent session; graft adds none. The parent's own isolation is left
+  * as it was, and each clone still has its private SQLConf. */
 object SessionScope {
   def withAqeOff[T](s: SparkSession)(body: SparkSession => T): T = {
-    val s2 = s.newSession()
+    val s2 = fresh(s)
     s2.conf.set("spark.sql.adaptive.enabled", "false")
     body(s2)
   }
@@ -34,7 +47,7 @@ object SessionScope {
     * knobs (q_mst drops shuffle partitions to quarter parallelism for
     * its node-sized rounds) without touching the shared conf. */
   def cloned[T](s: SparkSession)(body: SparkSession => T): T =
-    body(s.newSession())
+    body(fresh(s))
 
   /** [[withAqeOff]] + quarter-parallelism shuffles on the clone — the
     * task-floor lever for AQE-off iterative loops whose shuffles carry
@@ -49,4 +62,13 @@ object SessionScope {
         s2.sparkContext.defaultParallelism / 4).toString)
       body(s2)
     }
+
+  /** The one place a clone is made. The isolation flag is read once,
+    * lazily, on the session's first execution, so it must be set here,
+    * before the body runs anything. */
+  private def fresh(s: SparkSession): SparkSession = {
+    val s2 = s.newSession()
+    s2.conf.set("spark.sql.artifact.isolation.enabled", "false")
+    s2
+  }
 }
